@@ -123,15 +123,16 @@ class InvertedIndex:
         """Build in-memory handle.
 
         Caches only the docs table (small: one row per turn, tokens
-        included). The postings relation is left lazy — recomputing the
-        explode+groupBy from cached docs is ~10x cheaper than caching
-        13M+ posting rows through Spark's row-based block store; at real
-        scale postings are persisted columnar via :meth:`save` instead.
+        included). The postings relation is left lazy — re-running the
+        shuffle-free per-doc tokenize pass over the cached docs is
+        cheaper than caching 13M+ posting rows through Spark's
+        row-based block store; at real scale postings are persisted
+        columnar via :meth:`save` instead.
 
         With ``positions`` the Arrow-batched pandas tokenizer emits
-        finished posting rows (same rule as :meth:`build_persisted`):
-        the in-UDF per-doc position accumulation beats
-        collect_list+sort_array on exploded tokens by ~6x.
+        finished posting rows (same rule as :meth:`build_persisted`);
+        without, the JVM run-length pass (``postings_flat``) does. Both
+        compute tf/positions per document, with no exchange.
         """
         base = base_with_docint(turns)
         if cache:
@@ -212,8 +213,10 @@ class InvertedIndex:
         segments instead of re-tokenizing, and term stats aggregate the
         same columnar read. Three jobs total::
 
-            1. postings:  tokenize → posexplode → groupBy(term,docint)
-                          → bucket-partition by hash(term) → sorted write
+            1. postings:  tokenize → per-doc tf/positions (run-length
+                          pass, or the pandas UDF with positions; no
+                          exchange) → bucket-partition by hash(term)
+                          → sorted write
             2. docs:      base ⨝ (postings ⟶ groupBy(docint).sum(tf))
             3. terms:     postings ⟶ groupBy(term) stats
 

@@ -8,21 +8,23 @@ kept by the cardinality sub-index (``LabFieldIndex.java:422-475``) and
 the global count in the docId=-1 row (``LabFieldIndex.java:474-515``).
 
 Spark-first re-expression — the whole build is JVM-side (tokenize =
-split/filter column expressions, tf = posexplode + groupBy count): no
-Python in the hot path at all, whole-stage codegen end to end::
+split/filter column expressions, tf and positions = a run-length pass
+over each doc's sorted token array): no Python in the hot path at all,
+whole-stage codegen end to end::
 
-    turns ── tokens_col ──► posexplode ──► groupBy(term, docint)
-          └─ size(tokens) ─► doc_stats          │
-                                                ▼
+    turns ── tokens_col ──► sort per doc ──► runs ──► explode
+          └─ size(tokens) ─► doc_stats                  │
+                                                        ▼
                               postings(term, docint, tf, positions)
                               term_stats(term, df, cf, max_docint)
                               corpus_stats(n_docs, avg_doclen)
 
-The single shuffle is the groupBy on (term, docint) — a high-cardinality
-composite key, so Zipf term skew does NOT skew this exchange (the skewed
-unit is (term), not (term, docint)). Downstream per-term work
-(block building, stats) groups by term alone and is where salting
-applies (see blocks.py).
+Posting construction is shuffle-free: every occurrence of a (term,
+docint) pair comes from one source row, so tf/positions are computed
+per document inside one codegen projection (see :func:`postings_flat`)
+and no exchange sits between the tokenizer and the posting rows.
+Downstream per-term work (block building, stats) groups by term alone
+and is where salting applies (see blocks.py).
 """
 
 from __future__ import annotations
@@ -206,12 +208,11 @@ def postings_flat_pandas(
 ) -> DataFrame:
     """Arrow/pandas-UDF tokenizer emitting finished posting rows.
 
-    Unlike the explode+groupBy path, the per-doc (term → tf, positions)
-    aggregation happens inside the UDF, so postings need NO shuffle at
-    all — each input partition maps 1:1 to posting rows (the downstream
-    bucket-partitioning is the only exchange). This is the preferred
-    path when positions are wanted: collect_list+sort_array on 10^7
-    exploded tokens costs ~6x more than aggregating in the UDF.
+    Like :func:`postings_flat`, the per-doc (term → tf, positions)
+    aggregation needs NO shuffle — it happens inside the UDF, so each
+    input partition maps 1:1 to posting rows (the downstream
+    bucket-partitioning is the only exchange). The builders route
+    positions-bearing builds through this path.
 
     The aggregation is batch-vectorized: tokenization is the only
     per-row step (regex, C inside ``re``); grouping into (docint, term)

@@ -58,6 +58,13 @@ import threading
 
 _MANIFEST_LOCK = threading.Lock()
 
+# manifest entry fields that load() and shard_state() fold: a replayed
+# commit entry must agree with the kept one on each of them
+_FOLD_FIELDS = (
+    "n_turns", "sum_doclen", "expunged", "next_id",
+    "watermark_conv", "watermark_turn",
+)
+
 # cross-PROCESS single-writer enforcement: depth registry (per store
 # abspath) makes the lockfile re-entrant within one process — in-process
 # concurrency (build(max_concurrent), repair→expunge) is by design and
@@ -158,7 +165,9 @@ class SegmentStore:
         # n_docs/sum_doclen in the per-shard folds on load). Merge
         # markers ({**st, "merged_from": ...}) legitimately reuse
         # their shard's current delta index and are keyed separately.
-        seen: set = set()
+        # A replay agrees with the kept entry on every folded field;
+        # one that does not is corruption and raises.
+        seen: dict = {}
         out = []
         for e in entries:
             key = (
@@ -166,10 +175,17 @@ class SegmentStore:
                 e["delta"],
                 tuple(e["merged_from"]) if "merged_from" in e else None,
             )
-            if key in seen:
+            kept = seen.get(key)
+            if kept is None:
+                seen[key] = e
+                out.append(e)
                 continue
-            seen.add(key)
-            out.append(e)
+            diff = [f for f in _FOLD_FIELDS if kept.get(f) != e.get(f)]
+            if diff:
+                raise RuntimeError(
+                    f"conflicting manifest entries for shard {key[0]} "
+                    f"delta {key[1]} in {self._manifest_path}: {diff}"
+                )
         return out
 
     def _append_manifest(self, entry: dict) -> None:

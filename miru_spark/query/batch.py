@@ -103,6 +103,18 @@ def _mask_docs_pairs(
     return index.docs.select("docint", F.explode(qid_arr).alias("qid"))
 
 
+def _max_boost_leaves(leaves) -> list[tuple[tuple[bool, str], float]]:
+    """Leaves deduped by (kind, value) → sorted ``((is_prefix, value),
+    boost)``. Identical leaves at different '^B' boosts collapse to one
+    presence leaf at the MAX boost (a term matched by several leaves
+    takes the max weight, mirroring bm25._query_term_weights)."""
+    lb: dict[tuple[bool, str], float] = {}
+    for l in leaves:
+        key = (isinstance(l, Prefix), l.value)
+        lb[key] = max(lb.get(key, 0.0), l.boost)
+    return sorted(lb.items())
+
+
 def _or_meta_split(node) -> tuple[list, list] | None:
     """``Or(text leaves…, doc-meta leaves…)`` → (text_leaves,
     meta_leaves) with ≥ 1 meta leaf, else None — the OR-over-metadata
@@ -189,11 +201,7 @@ def search_batch(
                     f"{qid}: min_should_match needs an OR/AND of text clauses"
                 )
             for ci, cl in enumerate(clauses):
-                lb: dict[tuple[bool, str], float] = {}
-                for l in cl:
-                    key = (isinstance(l, Prefix), l.value)
-                    lb[key] = max(lb.get(key, 0.0), l.boost)
-                for (is_pref, val), boost in sorted(lb.items()):
+                for (is_pref, val), boost in _max_boost_leaves(cl):
                     fused_rows.append(
                         (qid, ci, "prefix" if is_pref else "term", val,
                          boost, "msm", int(msm), k, False, None)
@@ -246,12 +254,8 @@ def search_batch(
                     text_leaves, meta_leaves = om
                     or_specs[qid] = meta_leaves
                     or_k[qid] = k
-                    lb = {}
-                    for l in text_leaves:
-                        key = (isinstance(l, Prefix), l.value)
-                        lb[key] = max(lb.get(key, 0.0), l.boost)
                     for i, ((is_pref, val), boost) in enumerate(
-                        sorted(lb.items())
+                        _max_boost_leaves(text_leaves)
                     ):
                         fused_rows.append(
                             (qid, i, "prefix" if is_pref else "term",
@@ -269,16 +273,8 @@ def search_batch(
             mask_specs[qid] = (pos_meta, neg_meta)
         mode, leaves = f
         required_mode = "or" if tie is not None else mode
-        # dedupe leaves by (kind, value) — same AND-presence semantics as
-        # the single-query path; identical leaves at different '^B'
-        # boosts collapse to one presence leaf at the MAX boost (a term
-        # matched by several leaves takes the max weight, mirroring
-        # bm25._query_term_weights)
-        lb = {}
-        for l in leaves:
-            key = (isinstance(l, Prefix), l.value)
-            lb[key] = max(lb.get(key, 0.0), l.boost)
-        seen = sorted(lb.items())
+        # same AND-presence semantics as the single-query path
+        seen = _max_boost_leaves(leaves)
         required = len(seen) if required_mode == "and" else 1
         for i, ((is_pref, val), boost) in enumerate(seen):
             fused_rows.append(

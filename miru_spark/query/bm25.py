@@ -282,8 +282,8 @@ def _query_term_weights(index: InvertedIndex, leaves: list, pred) -> DataFrame:
     With '^B' clause boosts each leaf's matched terms carry ``idf·boost``
     and a term matched by several leaves takes the MAX weight — it still
     scores once (the postings predicate selects rows, it doesn't multiply
-    them; see the dedup note in search()). The per-leaf union runs over
-    the small term-stats table only, never the postings."""
+    them). The per-leaf union runs over the small term-stats table only,
+    never the postings."""
     if any(l.boost != 1.0 for l in leaves):
         from miru_spark.query.filters import _leaf_pred
 
@@ -305,6 +305,91 @@ def _query_term_weights(index: InvertedIndex, leaves: list, pred) -> DataFrame:
     )
 
 
+# -- the three stages every single-query scorer composes --------------------
+# 1. predicate: query leaves → postings scan predicate (_scan_pred)
+# 2. weighting: scanned postings ⋈ broadcast term weights → contrib (_weighted)
+# 3. top-k:     page predicate → TakeOrderedAndProject → metadata (_top_k)
+
+
+def _scan_pred(leaves: list) -> Column | None:
+    """Postings scan predicate for text Term/Prefix leaves: ONE ``isin``
+    over the exact terms (pushed to parquet as ``In(term, …)``) OR'd
+    with a ``startswith`` per prefix (``StringStartsWith``)."""
+    exact = sorted({l.value for l in leaves if isinstance(l, Term)})
+    prefixes = sorted({l.value for l in leaves if isinstance(l, Prefix)})
+    pred = F.col("term").isin(exact) if exact else None
+    for p in prefixes:
+        c = F.col("term").startswith(p)
+        pred = c if pred is None else (pred | c)
+    return pred
+
+
+def _weighted(
+    index: InvertedIndex,
+    leaves: list,
+    pred,
+    scanned: DataFrame | None = None,
+    how: str = "inner",
+    within: DataFrame | None = None,
+) -> DataFrame:
+    """Scanned postings (default: the postings under ``pred``) ⋈ the
+    broadcast term weights of ``leaves`` (see :func:`_query_term_weights`)
+    + each posting's BM25 ``contrib``, restricted to the ``within``
+    docints (a left-semi join) when given. doclen rides on the posting
+    rows, so scoring touches ONLY the postings table and the broadcast
+    weights (index-only access path)."""
+    if scanned is None:
+        scanned = index.postings.where(pred)
+    hits = scanned.join(_query_term_weights(index, leaves, pred), "term", how)
+    if within is not None:
+        hits = hits.join(within, "docint", "left_semi")
+    return hits.withColumn(
+        "contrib",
+        bm25_contrib(
+            F.col("tf").cast("double"),
+            F.col("idf"),
+            F.col("doclen").cast("double"),
+            index.avg_doclen,
+        ),
+    )
+
+
+def _with_meta(index: InvertedIndex, topk: DataFrame) -> DataFrame:
+    """Metadata joins AFTER the limit (k rows, not the full answer set),
+    then the k rows re-sort — the join does not preserve order."""
+    meta = index.docs.select("docint", "conv_id", "turn_idx")
+    return (
+        topk.join(meta, "docint")
+        .orderBy(F.desc("score"), F.desc("docint"))
+        .select("conv_id", "turn_idx", "docint", "score")
+    )
+
+
+def _top_k(
+    index: InvertedIndex, scored: DataFrame, k: int, page: Column | None = None
+) -> DataFrame:
+    """(docint, score, …) → the k best rows under (score desc, docint
+    desc), which Spark runs as TakeOrderedAndProject (per-partition heap
+    + driver merge), with their metadata. ``page`` (:func:`_page_pred`)
+    lands between the aggregation and the heap."""
+    if page is not None:
+        scored = scored.where(page)
+    topk = (
+        scored.orderBy(F.desc("score"), F.desc("docint"))
+        .limit(k)
+        .select("docint", "score")
+    )
+    return _with_meta(index, topk)
+
+
+def _live(index: InvertedIndex, df: DataFrame) -> DataFrame:
+    """Removal mask (reference MiruAggregateUtil.java:1140): tombstoned
+    docints never answer."""
+    if index.tombstones is None:
+        return df
+    return df.join(index.tombstones.select("docint"), "docint", "left_anti")
+
+
 def _fused_scored(
     index: InvertedIndex,
     mode: str,
@@ -312,8 +397,9 @@ def _fused_scored(
     ts_filter,
     neg_leaves: list | None = None,
 ) -> DataFrame:
-    """Unlimited (docint, score) for a fusable AND/OR query — everything
-    of the fused plan except pagination and the top-k heap.
+    """Unlimited (docint, score) for a fusable AND/OR query: ONE postings
+    scan + ONE groupBy computes both the per-leaf presence indicators
+    (the match predicate) and the BM25 score.
 
     ``neg_leaves`` (AND mode only, from :func:`_fusable_not`): negated
     text leaves ride the SAME postings scan — their rows carry no score
@@ -322,38 +408,13 @@ def _fused_scored(
     that disqualifies the doc in the same aggregation."""
     exact = sorted({l.value for l in leaves if isinstance(l, Term)})
     prefixes = sorted({l.value for l in leaves if isinstance(l, Prefix)})
-    pred = None
-    if exact:
-        pred = F.col("term").isin(exact)
-    for p in prefixes:
-        c = F.col("term").startswith(p)
-        pred = c if pred is None else (pred | c)
-
-    neg_pred = None
-    if neg_leaves:
-        neg_exact = sorted({l.value for l in neg_leaves if isinstance(l, Term)})
-        neg_pref = sorted({l.value for l in neg_leaves if isinstance(l, Prefix)})
-        if neg_exact:
-            neg_pred = F.col("term").isin(neg_exact)
-        for p in neg_pref:
-            c = F.col("term").startswith(p)
-            neg_pred = c if neg_pred is None else (neg_pred | c)
-
+    pred = _scan_pred(leaves)
+    neg_pred = _scan_pred(neg_leaves) if neg_leaves else None
     # weight table covers POSITIVE leaves only — negated terms never score
-    qterms = _query_term_weights(index, leaves, pred)
     scan_pred = pred if neg_pred is None else (pred | neg_pred)
-    base = index.postings.where(scan_pred)
-    hits = (
-        base.join(qterms, "term", "left" if neg_pred is not None else "inner")
-        .withColumn(
-            "contrib",
-            bm25_contrib(
-                F.col("tf").cast("double"),
-                F.col("idf"),
-                F.col("doclen").cast("double"),
-                index.avg_doclen,
-            ),
-        )
+    hits = _weighted(
+        index, leaves, pred, index.postings.where(scan_pred),
+        "left" if neg_pred is not None else "inner",
     )
     # per-leaf presence indicators + score in ONE aggregation
     aggs = [F.sum("contrib").alias("score")]
@@ -377,31 +438,58 @@ def _fused_scored(
         agg = agg.where(F.col("_nn") == 0)
     if ts_filter is not None:
         agg = agg.join(ts_filter, "docint", "left_semi")
-    if index.tombstones is not None:
-        # removal mask (reference MiruAggregateUtil.java:1140)
-        agg = agg.join(index.tombstones.select("docint"), "docint", "left_anti")
-    return agg.select("docint", "score")
+    return _live(index, agg).select("docint", "score")
 
 
-def _fused_search(
-    index: InvertedIndex,
-    mode: str,
-    leaves: list,
-    k: int,
-    ts_filter,
-    after: float | None = None,
-    exclude=None,
-    neg_leaves: list | None = None,
-) -> DataFrame:
-    agg = _fused_scored(index, mode, leaves, ts_filter, neg_leaves=neg_leaves)
-    page = _page_pred(after, exclude)
-    if page is not None:
-        agg = agg.where(page)
-    return (
-        agg.orderBy(F.desc("score"), F.desc("docint"))
-        .limit(k)
-        .select("docint", "score")
+def _scored(
+    index: InvertedIndex, node: Node, ts_lo, ts_hi
+) -> tuple[DataFrame, bool]:
+    """(docint, score) for every match of a parsed, multiterm-expanded
+    ``node`` — tombstones and the time-range mask applied — and whether
+    the query has a positive text term to rank by (False: every score is
+    0.0, a pure-metadata query).
+
+    Fusable queries take the single-scan plan (:func:`_plan_fused`);
+    everything else the tree plan: the filter evaluator's answer set,
+    then one OR-of-leaf-predicates postings scan scores every text leaf
+    shape (exact / prefix / wildcard / fuzzy) under a semi-join to it."""
+    plan = _plan_fused(index, node, ts_lo, ts_hi)
+    if plan is not None:
+        mode, leaves, negs, mask = plan
+        return _fused_scored(index, mode, leaves, mask, neg_leaves=negs), True
+    matched = _matched(index, node, ts_lo, ts_hi)
+    # a term matched by several leaves still scores once — the predicate
+    # selects rows, it doesn't multiply them
+    leaves = list(dict.fromkeys(positive_text_leaves(node)))
+    pred = text_leaves_pred(leaves)
+    if pred is None:
+        return matched.select("docint", F.lit(0.0).alias("score")), False
+    contribs = (
+        _weighted(index, leaves, pred, within=matched)
+        .groupBy("docint")
+        .agg(F.sum("contrib").alias("score"))
     )
+    # matched docs with no positive term still answer, at score 0
+    # (the reference scores the whole filtered answer set, FullText.java:139)
+    return (
+        matched.join(contribs, "docint", "left")
+        .withColumn("score", F.coalesce(F.col("score"), F.lit(0.0)))
+        .select("docint", "score"),
+        True,
+    )
+
+
+def _matched(index: InvertedIndex, node: Node, ts_lo, ts_hi) -> DataFrame:
+    """The tree plan's answer set: the filter evaluator's docints, minus
+    tombstones, semi-joined to the time-range mask against the (pruned)
+    doc table. ``node`` is already multiterm-expanded, so it goes to the
+    evaluator's dispatch directly — ``matching_docs`` would expand it
+    again, re-running the dictionary probe of an over-cap wildcard."""
+    matched = _live(index, FilterEvaluator(index)._eval(node))
+    ts_filter = _doc_mask(index, ts_lo, ts_hi)
+    if ts_filter is not None:
+        matched = matched.join(ts_filter, "docint", "left_semi")
+    return matched
 
 
 def scored_matches(
@@ -421,58 +509,7 @@ def scored_matches(
     node = parse_query(query, index.analyzer) if isinstance(query, str) else query
     from miru_spark.query.filters import expand_multiterm
 
-    node = expand_multiterm(index, node)
-
-    plan = _plan_fused(index, node, ts_lo, ts_hi)
-    if plan is not None:
-        mode, leaves, negs, mask = plan
-        return _fused_scored(index, mode, leaves, mask, neg_leaves=negs)
-
-    ts_filter = None
-    if ts_lo is not None or ts_hi is not None:
-        in_range = index.docs
-        if ts_lo is not None:
-            in_range = in_range.where(F.col("ts") >= F.lit(ts_lo))
-        if ts_hi is not None:
-            in_range = in_range.where(F.col("ts") <= F.lit(ts_hi))
-        ts_filter = in_range.select("docint")
-
-    ev = FilterEvaluator(index)
-    matched = ev.matching_docs(node)
-    if index.tombstones is not None:
-        matched = matched.join(
-            index.tombstones.select("docint"), "docint", "left_anti"
-        )
-    if ts_filter is not None:
-        matched = matched.join(ts_filter, "docint", "left_semi")
-
-    leaves = list(dict.fromkeys(positive_text_leaves(node)))
-    pred = text_leaves_pred(leaves)
-    if pred is None:
-        return matched.select("docint", F.lit(0.0).alias("score"))
-
-    qterms = _query_term_weights(index, leaves, pred)
-    contribs = (
-        index.postings.where(pred)
-        .join(qterms, "term")
-        .join(matched, "docint", "left_semi")
-        .withColumn(
-            "contrib",
-            bm25_contrib(
-                F.col("tf").cast("double"),
-                F.col("idf"),
-                F.col("doclen").cast("double"),
-                index.avg_doclen,
-            ),
-        )
-        .groupBy("docint")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    return (
-        matched.join(contribs, "docint", "left")
-        .withColumn("score", F.coalesce(F.col("score"), F.lit(0.0)))
-        .select("docint", "score")
-    )
+    return _scored(index, expand_multiterm(index, node), ts_lo, ts_hi)[0]
 
 
 def search(
@@ -488,6 +525,10 @@ def search(
 ) -> DataFrame:
     """Top-k search. Returns (conv_id, turn_idx, docint, score) ordered by
     (score desc, docint desc) [bm25] or (docint desc) [time].
+
+    The bm25 strategy is :func:`scored_matches` followed by the keyset
+    page predicate and the top-k heap; the time strategy (and a query
+    with no positive text term) returns the newest k matches.
 
     ``synonyms`` (term → alternatives) OR-expands positive text terms
     before planning (Lucene query-time SynonymGraph as BooleanQuery
@@ -518,96 +559,18 @@ def search(
 
     node = expand_multiterm(index, node)
 
-    meta0 = index.docs.select("docint", "conv_id", "turn_idx")
-    plan = _plan_fused(index, node, ts_lo, ts_hi) if strategy == "bm25" else None
-    if plan is not None:
-        mode, leaves, negs, mask = plan
-        topk = _fused_search(
-            index, mode, leaves, k, mask,
-            after=after, exclude=exclude, neg_leaves=negs,
+    if strategy == "bm25":
+        scored, ranked = _scored(index, node, ts_lo, ts_hi)
+        if ranked:
+            return _top_k(index, scored, k, _page_pred(after, exclude))
+    else:
+        scored = _matched(index, node, ts_lo, ts_hi).select(
+            "docint", F.lit(0.0).alias("score")
         )
-        return (
-            topk.join(meta0, "docint")
-            .orderBy(F.desc("score"), F.desc("docint"))
-            .select("conv_id", "turn_idx", "docint", "score")
-        )
-
-    ev = FilterEvaluator(index)
-    matched = ev.matching_docs(node)
-    if index.tombstones is not None:
-        matched = matched.join(
-            index.tombstones.select("docint"), "docint", "left_anti"
-        )
-
-    if ts_lo is not None or ts_hi is not None:
-        # time-range mask as a semi-join against the (pruned) doc table
-        in_range = index.docs
-        if ts_lo is not None:
-            in_range = in_range.where(F.col("ts") >= F.lit(ts_lo))
-        if ts_hi is not None:
-            in_range = in_range.where(F.col("ts") <= F.lit(ts_hi))
-        matched = matched.join(in_range.select("docint"), "docint", "left_semi")
-
-    meta = index.docs.select("docint", "conv_id", "turn_idx")
-
-    def _finish(topk: DataFrame) -> DataFrame:
-        # metadata joins AFTER the limit: k rows, not the full answer set
-        return (
-            topk.join(meta, "docint")
-            .orderBy(F.desc("score"), F.desc("docint"))
-            .select("conv_id", "turn_idx", "docint", "score")
-        )
-
-    # one OR-of-leaf-predicates postings scan covers every text leaf
-    # shape (exact / prefix / wildcard / fuzzy): a term matched by
-    # several leaves still scores once — the predicate selects rows,
-    # it doesn't multiply them
-    leaves = list(dict.fromkeys(positive_text_leaves(node)))
-    pred = text_leaves_pred(leaves)
-
-    if strategy == "time" or pred is None:
-        # newest-k (FullText.collectTime) / pure-metadata queries: score 0
-        ranked = matched.select("docint", F.lit(0.0).alias("score"))
-        if exclude:
-            ranked = ranked.where(~F.col("docint").isin([int(d) for d in exclude]))
-        topk = ranked.orderBy(F.desc("docint")).limit(k)
-        return _finish(topk)
-
-    # broadcast the tiny per-query term-weight table (idf per term,
-    # idf·boost with '^B' — see _query_term_weights)
-    qterms = _query_term_weights(index, leaves, pred)
-    # doclen rides on the posting rows — scoring touches ONLY the
-    # postings table + the broadcast weights (index-only access path)
-    contribs = (
-        index.postings.where(pred)
-        .join(qterms, "term")
-        .join(matched, "docint", "left_semi")
-        .withColumn(
-            "contrib",
-            bm25_contrib(
-                F.col("tf").cast("double"),
-                F.col("idf"),
-                F.col("doclen").cast("double"),
-                index.avg_doclen,
-            ),
-        )
-        .groupBy("docint")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    # matched docs with no positive term still answer, at score 0
-    # (the reference scores the whole filtered answer set, FullText.java:139)
-    ranked = matched.join(contribs, "docint", "left").withColumn(
-        "score", F.coalesce(F.col("score"), F.lit(0.0))
-    )
-    page = _page_pred(after, exclude)
-    if page is not None:
-        ranked = ranked.where(page)
-    topk = (
-        ranked.orderBy(F.desc("score"), F.desc("docint"))
-        .limit(k)
-        .select("docint", "score")
-    )
-    return _finish(topk)
+    # newest-k (FullText.collectTime) / pure-metadata queries: score 0
+    if exclude:
+        scored = scored.where(~F.col("docint").isin([int(d) for d in exclude]))
+    return _with_meta(index, scored.orderBy(F.desc("docint")).limit(k))
 
 
 def msm_clauses(node) -> list[list]:
@@ -687,30 +650,8 @@ def search_min_should_match(
     if not clauses:
         raise ValueError("min_should_match needs an OR/AND of text clauses")
     leaves = [l for cl in clauses for l in cl]
-
-    exact = sorted({l.value for l in leaves if isinstance(l, Term)})
-    prefixes = sorted({l.value for l in leaves if isinstance(l, Prefix)})
-    pred = None
-    if exact:
-        pred = F.col("term").isin(exact)
-    for p in prefixes:
-        c = F.col("term").startswith(p)
-        pred = c if pred is None else (pred | c)
-
-    qterms = _query_term_weights(index, leaves, pred)
-    hits = (
-        index.postings.where(pred)
-        .join(qterms, "term")
-        .withColumn(
-            "contrib",
-            bm25_contrib(
-                F.col("tf").cast("double"),
-                F.col("idf"),
-                F.col("doclen").cast("double"),
-                index.avg_doclen,
-            ),
-        )
-    )
+    pred = _scan_pred(leaves)
+    hits = _weighted(index, leaves, pred)
 
     def _leaf_term_pred(l):
         if isinstance(l, Term):
@@ -728,19 +669,7 @@ def search_min_should_match(
     for i in range(len(clauses)):
         n_present = n_present + F.col(f"_c{i}")
     agg = agg.where(n_present >= m)
-    if index.tombstones is not None:
-        agg = agg.join(index.tombstones.select("docint"), "docint", "left_anti")
-    topk = (
-        agg.orderBy(F.desc("score"), F.desc("docint"))
-        .limit(k)
-        .select("docint", "score")
-    )
-    meta = index.docs.select("docint", "conv_id", "turn_idx")
-    return (
-        topk.join(meta, "docint")
-        .orderBy(F.desc("score"), F.desc("docint"))
-        .select("conv_id", "turn_idx", "docint", "score")
-    )
+    return _top_k(index, _live(index, agg), k)
 
 
 def search_dismax(
@@ -783,30 +712,8 @@ def search_dismax(
         raise ValueError("dismax needs a fusable OR text query")
     mask = _doc_mask(index, None, None, pos_meta, neg_meta)
     _, leaves = f
-
-    exact = sorted({l.value for l in leaves if isinstance(l, Term)})
-    prefixes = sorted({l.value for l in leaves if isinstance(l, Prefix)})
-    pred = None
-    if exact:
-        pred = F.col("term").isin(exact)
-    for p in prefixes:
-        c = F.col("term").startswith(p)
-        pred = c if pred is None else (pred | c)
-
-    qterms = _query_term_weights(index, leaves, pred)
-    hits = (
-        index.postings.where(pred)
-        .join(qterms, "term")
-        .withColumn(
-            "contrib",
-            bm25_contrib(
-                F.col("tf").cast("double"),
-                F.col("idf"),
-                F.col("doclen").cast("double"),
-                index.avg_doclen,
-            ),
-        )
-    )
+    pred = _scan_pred(leaves)
+    hits = _weighted(index, leaves, pred)
     agg = hits.groupBy("docint").agg(
         (
             F.max("contrib")
@@ -815,16 +722,4 @@ def search_dismax(
     )
     if mask is not None:
         agg = agg.join(mask, "docint", "left_semi")
-    if index.tombstones is not None:
-        agg = agg.join(index.tombstones.select("docint"), "docint", "left_anti")
-    topk = (
-        agg.orderBy(F.desc("score"), F.desc("docint"))
-        .limit(k)
-        .select("docint", "score")
-    )
-    meta = index.docs.select("docint", "conv_id", "turn_idx")
-    return (
-        topk.join(meta, "docint")
-        .orderBy(F.desc("score"), F.desc("docint"))
-        .select("conv_id", "turn_idx", "docint", "score")
-    )
+    return _top_k(index, _live(index, agg), k)

@@ -20,13 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from miru_spark.index import InvertedIndex
-from miru_spark.query.ast import Prefix, Term
-from miru_spark.query.bm25 import (
-    _fusable,
-    _query_term_weights,
-    bm25_contrib,
-    search,
-)
+from miru_spark.query.bm25 import _fusable, _scan_pred, _weighted, search
 from miru_spark.query.parser import parse_query
 
 
@@ -64,29 +58,9 @@ def explain_scores(
         "conv_id", "turn_idx", "docint", "score"
     )
 
-    exact = sorted({l.value for l in leaves if isinstance(l, Term)})
-    prefixes = sorted({l.value for l in leaves if isinstance(l, Prefix)})
-    pred = None
-    if exact:
-        pred = F.col("term").isin(exact)
-    for p in prefixes:
-        c = F.col("term").startswith(p)
-        pred = c if pred is None else (pred | c)
-
-    qterms = _query_term_weights(index, leaves, pred)
-    rows = (
-        index.postings.where(pred)
-        .join(F.broadcast(hits), "docint")
-        .join(qterms, "term")
-        .withColumn(
-            "contrib",
-            bm25_contrib(
-                F.col("tf").cast("double"),
-                F.col("idf"),
-                F.col("doclen").cast("double"),
-                index.avg_doclen,
-            ),
-        )
+    pred = _scan_pred(leaves)
+    rows = _weighted(
+        index, leaves, pred, index.postings.where(pred).join(F.broadcast(hits), "docint")
     )
     return rows.select(
         "conv_id",

@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from miru_spark.index import InvertedIndex
-from miru_spark.query.bm25 import bm25_contrib, idf_col
+from miru_spark.query.ast import Term
+from miru_spark.query.bm25 import _scan_pred, _top_k, _weighted
 from miru_spark.tokenize import tokenize_py
 
 
@@ -170,34 +171,11 @@ def search_phrase(
     """Top-k BM25 over docs containing the phrase (``slop`` relaxes to
     ordered proximity, see :func:`phrase_match_docs`)."""
     seq = _phrase_terms(index, phrase)
-    terms = sorted(set(seq))
+    leaves = [Term(t) for t in sorted(set(seq))]
     matched = phrase_match_docs(index, seq, slop=slop)
-    qterms = F.broadcast(
-        index.terms.where(F.col("term").isin(terms)).select(
-            "term", idf_col(F.col("df"), index.n_docs).alias("idf")
-        )
-    )
-    contribs = (
-        index.postings.where(F.col("term").isin(terms))
-        .join(qterms, "term")
-        .join(matched, "docint", "left_semi")
-        .withColumn(
-            "contrib",
-            bm25_contrib(
-                F.col("tf").cast("double"),
-                F.col("idf"),
-                F.col("doclen").cast("double"),
-                index.avg_doclen,
-            ),
-        )
+    scored = (
+        _weighted(index, leaves, _scan_pred(leaves), within=matched)
         .groupBy("docint")
         .agg(F.sum("contrib").alias("score"))
     )
-    meta = index.docs.select("docint", "conv_id", "turn_idx")
-    return (
-        contribs.orderBy(F.desc("score"), F.desc("docint"))
-        .limit(k)
-        .join(meta, "docint")
-        .orderBy(F.desc("score"), F.desc("docint"))
-        .select("conv_id", "turn_idx", "docint", "score")
-    )
+    return _top_k(index, scored, k)

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from miru_spark.index import InvertedIndex
 from miru_spark.query.ast import Node, positive_text_leaves
-from miru_spark.query.bm25 import scored_matches
+from miru_spark.query.bm25 import _live, scored_matches
 from miru_spark.query.filters import expand_multiterm, text_leaves_pred
 from miru_spark.query.parser import parse_query
 
@@ -134,11 +134,7 @@ def search_lm_dirichlet(
     )
     # removal mask BEFORE the heap — a tombstoned doc must not occupy a
     # top-k slot (MiruRemovalIndex semantics, masked out of every answer)
-    if index.tombstones is not None:
-        contribs = contribs.join(
-            index.tombstones.select("docint"), "docint", "left_anti"
-        )
-    topk = contribs.orderBy(F.desc("score"), F.desc("docint")).limit(k)
+    topk = _live(index, contribs).orderBy(F.desc("score"), F.desc("docint")).limit(k)
     return (
         topk.join(index.docs.select("docint", "conv_id", "turn_idx"), "docint")
         .select("conv_id", "turn_idx", "docint", "score")

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from miru_spark.index import InvertedIndex
 from miru_spark.query.ast import Node, Prefix
 from miru_spark.query.blockmax import search_blocks_and, search_blocks_or
-from miru_spark.query.bm25 import _fusable, search
+from miru_spark.query.bm25 import _fusable, _with_meta, search
 from miru_spark.query.parser import parse_query
 
 # measured crossovers (BENCH/BASELINE.md): AND blocks win once the scan
@@ -41,15 +41,6 @@ from miru_spark.query.parser import parse_query
 # probe's extra job. Both are per-QUERY posting-mass thresholds.
 AND_MIN_POSTINGS = 1_000_000
 OR_WAND_MIN_POSTINGS = 500_000_000
-
-
-def _with_meta(index: InvertedIndex, topk: DataFrame) -> DataFrame:
-    meta = index.docs.select("docint", "conv_id", "turn_idx")
-    return (
-        topk.join(meta, "docint")
-        .orderBy(F.desc("score"), F.desc("docint"))
-        .select("conv_id", "turn_idx", "docint", "score")
-    )
 
 
 def estimate_postings(index: InvertedIndex, terms: list[str]) -> int:

@@ -4,6 +4,8 @@ MiruSipIndex.java:20-42, FullTextGatherer.java:175-253)."""
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pytest
 
@@ -382,3 +384,35 @@ def test_manifest_duplicate_commit_entries_fold_once(
         .load()
         .avg_doclen
     )
+
+
+def test_manifest_conflicting_duplicate_entry_raises(spark, tiny_turns, tmp_path):
+    """Two entries for one (shard, delta) commit that disagree on a
+    folded count are corruption, not a replay: folding must raise
+    instead of silently keeping the first."""
+    store = _store(spark, tmp_path / "conflict")
+    store.build(tiny_turns)
+    with open(store._manifest_path) as f:
+        first = json.loads(f.readline())
+    with open(store._manifest_path, "a") as f:
+        f.write(json.dumps({**first, "n_turns": first["n_turns"] + 1}) + "\n")
+    with pytest.raises(RuntimeError, match="conflicting manifest entries"):
+        store.load()
+
+
+def test_manifest_recovered_replay_folds_once(spark, tiny_turns, tmp_path):
+    """The reader-finishes-commit race appends the recovered twin of a
+    writer's entry: same folded fields, different bookkeeping (no
+    build_ms, a recovered flag). It folds exactly like one entry."""
+    store = _store(spark, tmp_path / "replay")
+    store.build(tiny_turns)
+    before = store.load()
+    with open(store._manifest_path) as f:
+        first = json.loads(f.readline())
+    twin = {k: v for k, v in first.items() if k != "build_ms"}
+    with open(store._manifest_path, "a") as f:
+        f.write(json.dumps({**twin, "recovered": True}) + "\n")
+    after = store.load()
+    assert after.n_docs == before.n_docs
+    assert after.avg_doclen == pytest.approx(before.avg_doclen)
+    assert len(store.manifest()) == N_SHARDS

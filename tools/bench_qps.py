@@ -107,17 +107,17 @@ def main() -> None:
     n_rows_bat = len(search_batch(idx, queries).collect())
     t_bat = time.time() - t0
 
-    # steady state: a long-lived serving session re-runs the batched
-    # tick with plan/codegen/broadcasts already warm — the number a
-    # persistent serving tier (one shared SparkSession, e.g. behind
-    # Spark Connect) actually sustains. First tick above pays the
-    # one-time batch-plan codegen; report the best warm tick.
-    steady = []
+    # warm ticks: a long-lived serving session re-runs the batched tick
+    # with plan/codegen/broadcasts already warm (one shared SparkSession,
+    # e.g. behind Spark Connect). The first tick above pays the one-time
+    # batch-plan codegen. Three warm ticks run and the BEST one is
+    # reported — a best case, not a steady-state median.
+    warm = []
     for _ in range(3):
         t0 = time.time()
         search_batch(idx, queries).collect()
-        steady.append(time.time() - t0)
-    t_steady = min(steady)
+        warm.append(time.time() - t0)
+    t_best = min(warm)
 
     nq = len(queries)
     result = {
@@ -129,17 +129,16 @@ def main() -> None:
         "sequential": {"sec": round(t_seq, 2), "qps": round(nq / t_seq, 2)},
         "concurrent": {"sec": round(t_thr, 2), "qps": round(nq / t_thr, 2)},
         "batched": {"sec": round(t_bat, 2), "qps": round(nq / t_bat, 2)},
-        "batched_steady": {
-            "sec": round(t_steady, 2),
-            "qps": round(nq / t_steady, 2),
-            "ticks_sec": [round(x, 2) for x in steady],
-            "note": "warm long-lived session, repeated batch tick "
-            "(serving-tier steady state; first batch above pays "
-            "one-time plan codegen)",
+        "best_warm_tick": {
+            "sec": round(t_best, 2),
+            "qps": round(nq / t_best, 2),
+            "ticks_sec": [round(x, 2) for x in warm],
+            "note": "best of 3 warm batch ticks in a long-lived session "
+            "(first batch above pays one-time plan codegen)",
         },
         "concurrency_speedup": round(t_seq / t_thr, 2),
         "batch_speedup": round(t_seq / t_bat, 2),
-        "steady_speedup": round(t_seq / t_steady, 2),
+        "best_warm_tick_speedup": round(t_seq / t_best, 2),
     }
     print(json.dumps(result, indent=1))
     with open(args.out, "w") as f:
